@@ -33,9 +33,11 @@ schedules order by (priority DESC, idx_id ASC) per host. A killed job
 resumes from the last committed snapshot with an identical schedule
 (tests/test_frontier.py::test_resume_determinism).
 
-Scale: the only frontier-wide shuffles are the seen and known anti-joins
-(both bloom-pruned to their maybe-member survivors) and the per-host
-window/groupBy; the pages fetch join is an equi join on url_norm that AQE
+Scale: above ``BROADCAST_SET_ROWS`` the seen and known filters bloom-test
+the candidates (one shard exchange) and the exact step scans the set
+against the maybe-member survivors; the set is shuffled only when the
+survivors outgrow a broadcast (urlseen.filter_unseen). The other
+frontier-wide shuffle is the per-host window/groupBy; the pages fetch join is an equi join on url_norm that AQE
 turns into a broadcast when the scheduled set is small.
 """
 
@@ -66,6 +68,10 @@ FRONTIER_SCHEMA = T.StructType(
 
 SEEN_SCHEMA = "url_hash long, url_norm string"
 PRIORITY_DECAY = 0.5
+# Seen/known sets of at most this many rows are filtered with a broadcast
+# hash anti join (~16 B/hash, ≈16 MB at the gate); larger ones take the
+# sharded bloom path, urlseen.filter_unseen.
+BROADCAST_SET_ROWS = 1_000_000
 
 
 def candidates_from_urls(df: DataFrame, round_no: int, id_prefix: str,
@@ -209,9 +215,15 @@ class FrontierEngine:
 
         pending = self._read("frontier_pending")
         known = self._read("frontier_known")
-        known_shards = self._read("known_shards")
         seen = self._read("seen")
-        shards = self._read("urlseen_shards")
+        # stores written before the current bloom bit layout get their shards
+        # rebuilt from the exact tables; the round commits the rebuilt ones
+        known_shards = urlseen.with_current_layout(
+            self._read("known_shards"), known, self.n_shards, self.bloom_bits
+        )
+        shards = urlseen.with_current_layout(
+            self._read("urlseen_shards"), seen, self.n_shards, self.bloom_bits
+        )
         robots = self._read("robots")
 
         # 1. URL-seen: bloom prefilter + exact anti join. Two scale-adaptive
@@ -229,7 +241,7 @@ class FrontierEngine:
         if seen_total == 0:
             unseen = pending.persist()
             dup = spark.createDataFrame([], pending.schema)
-        elif seen_total <= 1_000_000:
+        elif seen_total <= BROADCAST_SET_ROWS:
             seen_keys = F.broadcast(seen.select("url_hash"))
             unseen = pending.join(seen_keys, "url_hash", "left_anti").persist()
             dup = pending.join(seen_keys, "url_hash", "left_semi")
@@ -448,11 +460,14 @@ class FrontierEngine:
             + s.get("counters", {}).get("discovered_new", 0)
             for s in self.store.snapshots()
         )
-        if known_total <= 1_000_000:
+        if known_total <= BROADCAST_SET_ROWS:
             new_pending = discovered.join(
                 F.broadcast(known.select("url_hash")), "url_hash", "left_anti"
             )
         elif known_shards is not None:
+            # filter_unseen reads its candidates twice (bloom test, then the
+            # final anti join): cache the link-canonicalize UDF's output
+            discovered = discovered.persist()
             new_pending = urlseen.filter_unseen(
                 discovered, known_shards, known, self.n_shards
             )
@@ -638,7 +653,7 @@ class FrontierEngine:
                     phases["p_write_secs"] = ws
             print(f"[frontier-timing] round {round_no}: {phases}", flush=True)
             counters["phases"] = phases  # machine-readable (scaling harness)
-        for df in (unseen, sched_all, proc, settled_delta, pending_new):
+        for df in (unseen, sched_all, proc, settled_delta, pending_new, discovered):
             df.unpersist()
         return counters
 

@@ -8,11 +8,20 @@ with engine-owned distributed state:
 - hash space is sharded by ``pmod(url_hash, n_shards)``; each shard is an
   independent bloom bitmap built/merged per-group via ``applyInPandas``
   (state size ∝ shards × bitmap, not ∝ rows seen),
-- membership is a broadcast join of the (small) shard table onto candidates
-  + a vectorized numpy bit-test in ``mapInPandas``,
-- bloom "maybe-seen" hits get an exact ``left_anti`` pass against the seen
-  table: the bloom gives no-false-negative *pruning*, the anti join removes
-  the false positives (SURVEY.md §2.3).
+- membership is a shard-cogrouped vectorized numpy bit test; each
+  candidate is tested once,
+- bloom "maybe-seen" survivors get an exact pass that SCANS the seen table
+  (a semi join whose build side is the survivors) and never shuffles it;
+  the hits it finds are anti-joined away. The bloom gives no-false-negative
+  *pruning*, the exact pass removes the false positives (SURVEY.md §2.3).
+
+Bit-layout invariant: bit indices are independent of the shard id. The
+shard id fixes the low bits of a shard's hashes, so ``_indices`` runs every
+hash through a splitmix64 finalizer before deriving its double-hash pair;
+without it each index row of a shard falls into one residue class mod
+``n_shards`` and the filter saturates. Shard rows carry ``bit_layout``;
+tables without it were written with the old layout and are refused
+(``require_layout``) — rebuild them from the exact key table.
 
 Scale math (documented for the 10^10 target): 10^10 URLs at 1% FPR need
 ~9.6 bits/URL ≈ 12 GB of bitmap. With 4096 shards that is ~3 MB/shard —
@@ -24,20 +33,25 @@ their own hash partition. In-sandbox defaults are scaled down (64 shards,
 from __future__ import annotations
 
 import math
+import weakref
 from typing import Optional
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
+_FILTER_FIELDS = [
+    T.StructField("shard_id", T.IntegerType(), False),
+    T.StructField("filter_bytes", T.BinaryType(), False),
+    T.StructField("n_items", T.LongType(), False),
+    T.StructField("capacity", T.LongType(), False),
+    T.StructField("fpr", T.DoubleType(), False),
+]
+# Bloom shard rows record the bit layout they were built with (see
+# ``_indices``). Layout 1, the pre-splitmix one, had no column.
+BIT_LAYOUT = 2
 SHARD_SCHEMA = T.StructType(
-    [
-        T.StructField("shard_id", T.IntegerType(), False),
-        T.StructField("filter_bytes", T.BinaryType(), False),
-        T.StructField("n_items", T.LongType(), False),
-        T.StructField("capacity", T.LongType(), False),
-        T.StructField("fpr", T.DoubleType(), False),
-    ]
+    _FILTER_FIELDS + [T.StructField("bit_layout", T.IntegerType(), False)]
 )
 
 
@@ -49,14 +63,63 @@ def _k_hashes(fpr: float) -> int:
     return max(1, round(-math.log(fpr) / math.log(2)))
 
 
+def _mix64(h: np.ndarray) -> np.ndarray:
+    """splitmix64 finalizer: every output bit depends on every input bit."""
+    z = h.astype(np.uint64)
+    z ^= z >> np.uint64(30)
+    z *= np.uint64(0xBF58476D1CE4E5B9)
+    z ^= z >> np.uint64(27)
+    z *= np.uint64(0x94D049BB133111EB)
+    z ^= z >> np.uint64(31)
+    return z
+
+
 def _indices(hashes: np.ndarray, m_bits: int, k: int) -> np.ndarray:
     """Double hashing h1 + i*h2 (Kirsch–Mitzenmacher): k index rows from one
-    64-bit hash, vectorized over the batch."""
-    h = hashes.astype(np.uint64)
-    h1 = h
-    h2 = (h ^ np.uint64(0x9E3779B97F4A7C15)) * np.uint64(0xBF58476D1CE4E5B9) | np.uint64(1)
+    64-bit hash, vectorized over the batch.
+
+    A shard holds only hashes with one value of ``hash mod n_shards``, so
+    h1/h2 come from the *mixed* hash: taken from the raw hash, every index
+    row of a shard would share one residue mod gcd(n_shards, m_bits)."""
+    z = _mix64(hashes)
+    h2 = (z >> np.uint64(32)) | np.uint64(1)
     i = np.arange(k, dtype=np.uint64)[:, None]
-    return ((h1[None, :] + i * h2[None, :]) % np.uint64(m_bits)).astype(np.int64)
+    return ((z[None, :] + i * h2[None, :]) % np.uint64(m_bits)).astype(np.int64)
+
+
+def _current_layout(shards: DataFrame) -> bool:
+    # a schema check — no Spark job
+    return "bit_layout" in shards.columns
+
+
+def require_layout(shards: DataFrame) -> DataFrame:
+    """Refuse bloom shards built with another bit layout: testing them with
+    ``_indices`` would report seen hashes as unseen."""
+    if not _current_layout(shards):
+        raise ValueError(
+            "urlseen shards lack 'bit_layout': they were built with the pre-"
+            f"splitmix bit layout (this code writes layout {BIT_LAYOUT}); "
+            "rebuild them with build_shards from the exact key table"
+        )
+    return shards
+
+
+def with_current_layout(
+    shards: Optional[DataFrame], keys: DataFrame, n_shards: int, m_bits: int
+) -> Optional[DataFrame]:
+    """``shards`` if built with the current bit layout, else rebuilt from
+    ``keys``, the exact (url_hash) table they summarize."""
+    if shards is None or _current_layout(shards):
+        return shards
+    return build_shards(keys, n_shards, m_bits)
+
+
+def _one_shard_row(shard_pdf: pd.DataFrame) -> None:
+    # a duplicated shard row (e.g. a missed merge_shards) would silently
+    # test against ONE of two filters → false "unseen" → bloom guarantee
+    # violated downstream. Fail loudly instead.
+    if len(shard_pdf) > 1:
+        raise ValueError(f"duplicate urlseen shard rows: {shard_pdf['shard_id'].tolist()}")
 
 
 def shard_of(col, n_shards: int):
@@ -82,6 +145,7 @@ def build_shards(
                 "n_items": [len(pdf)],
                 "capacity": [int(m_bits / optimal_bits_per_item(fpr))],
                 "fpr": [fpr],
+                "bit_layout": [BIT_LAYOUT],
             }
         )
 
@@ -111,10 +175,12 @@ def merge_shards(a: DataFrame, b: DataFrame) -> DataFrame:
                 "n_items": [n],
                 "capacity": [int(pdf["capacity"].iloc[0])],
                 "fpr": [float(pdf["fpr"].iloc[0])],
+                "bit_layout": [BIT_LAYOUT],
             }
         )
 
-    return a.unionByName(b).groupBy("shard_id").applyInPandas(merge, SHARD_SCHEMA)
+    rows = require_layout(a).unionByName(require_layout(b))
+    return rows.groupBy("shard_id").applyInPandas(merge, SHARD_SCHEMA)
 
 
 def extend_shards(
@@ -160,7 +226,7 @@ def extend_shards(
     )
     rows = hash_rows
     if shards is not None:
-        bitmap_rows = shards.select(
+        bitmap_rows = require_layout(shards).select(
             "shard_id",
             F.lit(0).cast("long").alias("url_hash"),
             "filter_bytes",
@@ -191,6 +257,7 @@ def extend_shards(
                 "n_items": [n],
                 "capacity": [capacity],
                 "fpr": [fpr],
+                "bit_layout": [BIT_LAYOUT],
             }
         )
 
@@ -220,10 +287,7 @@ def mark_maybe_seen(candidates: DataFrame, shards: DataFrame, n_shards: int) -> 
         if cand_pdf.empty:
             out["maybe_seen"] = pd.Series([], dtype=bool)
             return out
-        # a duplicated shard row (e.g. a missed merge_shards) would silently
-        # test against ONE of two bitmaps → false "unseen" → bloom guarantee
-        # violated downstream. Fail loudly instead.
-        assert len(shard_pdf) <= 1, f"duplicate urlseen shard rows: {shard_pdf['shard_id'].tolist()}"
+        _one_shard_row(shard_pdf)
         res = np.zeros(len(cand_pdf), dtype=bool)
         if not shard_pdf.empty and shard_pdf["filter_bytes"].iloc[0] is not None:
             bits = np.unpackbits(np.frombuffer(shard_pdf["filter_bytes"].iloc[0], dtype=np.uint8))
@@ -234,7 +298,7 @@ def mark_maybe_seen(candidates: DataFrame, shards: DataFrame, n_shards: int) -> 
 
     return (
         cand.groupBy("shard_id")
-        .cogroup(shards.select("shard_id", "filter_bytes").groupBy("shard_id"))
+        .cogroup(require_layout(shards).select("shard_id", "filter_bytes").groupBy("shard_id"))
         .applyInPandas(lambda key, c, s: test(c, s), out_schema)
     )
 
@@ -243,6 +307,7 @@ def mark_maybe_seen(candidates: DataFrame, shards: DataFrame, n_shards: int) -> 
 
 CUCKOO_FP_BITS = 16
 CUCKOO_SLOTS = 4  # slots per bucket
+CUCKOO_SCHEMA = T.StructType(_FILTER_FIELDS)
 
 
 def _cuckoo_parts(hashes: np.ndarray, n_buckets: int):
@@ -308,7 +373,7 @@ def build_cuckoo_shards(hashed: DataFrame, n_shards: int = 64, n_buckets: int = 
         hashed.select("url_hash")
         .withColumn("shard_id", shard_of(F.col("url_hash"), n_shards))
         .groupBy("shard_id")
-        .applyInPandas(build, SHARD_SCHEMA)
+        .applyInPandas(build, CUCKOO_SCHEMA)
     )
 
 
@@ -351,7 +416,7 @@ def cuckoo_delete_shards(shards: DataFrame, hashed: DataFrame, n_shards: int, n_
     return (
         shards.groupBy("shard_id")
         .cogroup(dels.groupBy("shard_id"))
-        .applyInPandas(delete, SHARD_SCHEMA)
+        .applyInPandas(delete, CUCKOO_SCHEMA)
     )
 
 
@@ -368,7 +433,7 @@ def mark_maybe_seen_cuckoo(candidates: DataFrame, shards: DataFrame, n_shards: i
         if cand_pdf.empty:
             out["maybe_seen"] = pd.Series([], dtype=bool)
             return out
-        assert len(shard_pdf) <= 1, f"duplicate urlseen shard rows: {shard_pdf['shard_id'].tolist()}"
+        _one_shard_row(shard_pdf)
         res = np.zeros(len(cand_pdf), dtype=bool)
         if not shard_pdf.empty and shard_pdf["filter_bytes"].iloc[0] is not None:
             res = cuckoo_contains(
@@ -387,13 +452,34 @@ def mark_maybe_seen_cuckoo(candidates: DataFrame, shards: DataFrame, n_shards: i
 def filter_unseen(
     candidates: DataFrame, shards: DataFrame, seen: DataFrame, n_shards: int
 ) -> DataFrame:
-    """Exact unseen set: bloom prefilter prunes the (vast) definitely-unseen
-    majority from the anti join; only maybe-seen rows shuffle against the
-    seen table (SURVEY.md §2.3 URL-seen anti join)."""
-    marked = mark_maybe_seen(candidates, shards, n_shards)
-    fresh = marked.where(~F.col("maybe_seen"))
+    """Exact unseen set: the ``candidates`` rows whose url_hash is not in
+    ``seen`` (SURVEY.md §2.3 URL-seen anti join), in three steps:
+
+    1. the bloom test runs once per candidate hash; only the maybe-seen
+       survivors' ``url_hash`` is kept, and persisted;
+    2. ``hits = seen ⋉ survivors``, a semi join whose build side is the
+       survivors: the seen table is scanned, never shuffled or deduplicated;
+    3. ``candidates ▷ hits``. Exact because the bloom has no false
+       negatives: every seen candidate is a survivor, so hits holds every
+       seen candidate key. An anti join ignores duplicate keys.
+
+    Both joins broadcast when the survivors' measured size fits Spark's
+    ``spark.sql.autoBroadcastJoinThreshold`` (hits ⊆ survivors when seen
+    keys are distinct, as the frontier's append-only tables are); otherwise
+    both are sort-merge joins over the same persisted survivors. The
+    survivors cache is released when the returned DataFrame is
+    garbage-collected."""
     survivors = (
-        marked.where(F.col("maybe_seen"))
-        .join(seen.select("url_hash").distinct(), "url_hash", "left_anti")
+        mark_maybe_seen(candidates.select("url_hash"), shards, n_shards)
+        .where(F.col("maybe_seen"))
+        .select("url_hash")
+        .persist()
     )
-    return fresh.unionByName(survivors).drop("maybe_seen", "shard_id")
+    # the threshold in bytes, as Spark's planner reads it (-1 disables)
+    limit = candidates.sparkSession._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    # 8 bytes per row: the long key is the only column
+    join = "broadcast" if 8 * survivors.count() <= limit else "shuffle_merge"
+    hits = seen.select("url_hash").join(survivors.hint(join), "url_hash", "left_semi")
+    out = candidates.join(hits.hint(join), "url_hash", "left_anti").select(candidates.columns)
+    weakref.finalize(out, survivors.unpersist).atexit = False
+    return out

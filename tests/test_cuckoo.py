@@ -59,3 +59,12 @@ class TestCuckoo:
         shards = urlseen.build_cuckoo_shards(df, N_SHARDS, N_BUCKETS)
         total = shards.agg(F.sum("n_items")).collect()[0][0]
         assert total == 300
+
+    def test_duplicate_shard_row_raises(self, spark):
+        from pyspark.errors import PythonException
+
+        df = _hashed(spark, ["http://dup.com/1"])
+        shards = urlseen.build_cuckoo_shards(df, N_SHARDS, N_BUCKETS)
+        marked = urlseen.mark_maybe_seen_cuckoo(df, shards.unionByName(shards), N_SHARDS, N_BUCKETS)
+        with pytest.raises(PythonException, match="ValueError: duplicate urlseen shard rows"):
+            marked.collect()

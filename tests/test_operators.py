@@ -68,6 +68,44 @@ class TestUrlSeen:
         fp = urlseen.mark_maybe_seen(probes, shards, self.N_SHARDS).where(F.col("maybe_seen")).count()
         assert fp / 2000 < 0.05
 
+    def test_fpr_matches_theory(self, spark):
+        """64 shards × 2^14 bits at ~1,000 items per shard: the FPR on
+        disjoint probes is within 2× of (1-e^{-kn/m})^k per shard. Bit
+        indices that depended on the shard id would saturate each shard's
+        reachable bits and read an FPR near 1."""
+        import math
+
+        n_shards, m_bits = 64, 1 << 14
+        inserted = spark.range(64_000).select(F.xxhash64("id").alias("url_hash"))
+        probes = spark.range(64_000, 264_000).select(F.xxhash64("id").alias("url_hash"))
+        shards = urlseen.build_shards(inserted, n_shards, m_bits).persist()
+        k = urlseen._k_hashes(0.01)
+        per_shard = [
+            (1 - math.exp(-k * r.n_items / m_bits)) ** k
+            for r in shards.select("n_items").collect()
+        ]
+        theory = sum(per_shard) / n_shards
+        fp = urlseen.mark_maybe_seen(probes, shards, n_shards).where(F.col("maybe_seen")).count()
+        shards.unpersist()
+        assert theory / 2 <= fp / 200_000 <= theory * 2, (fp / 200_000, theory)
+
+    def test_duplicate_shard_row_raises(self, spark):
+        from pyspark.errors import PythonException
+
+        d = self._hashed(spark, ["http://a.com/1"])
+        shards = urlseen.build_shards(d, self.N_SHARDS, self.M_BITS)
+        marked = urlseen.mark_maybe_seen(d, shards.unionByName(shards), self.N_SHARDS)
+        with pytest.raises(PythonException, match="ValueError: duplicate urlseen shard rows"):
+            marked.collect()
+
+    def test_old_layout_shards_refused(self, spark):
+        d = self._hashed(spark, ["http://a.com/1"])
+        old = urlseen.build_shards(d, self.N_SHARDS, self.M_BITS).drop("bit_layout")
+        with pytest.raises(ValueError, match="bit_layout"):
+            urlseen.mark_maybe_seen(d, old, self.N_SHARDS)
+        with pytest.raises(ValueError, match="bit_layout"):
+            urlseen.extend_shards(old, d, self.N_SHARDS, self.M_BITS)
+
     def test_merge_equivalent_to_single_build(self, spark):
         a = self._hashed(spark, [f"http://a.com/{i}" for i in range(200)])
         b = self._hashed(spark, [f"http://b.com/{i}" for i in range(200)])

@@ -16,8 +16,26 @@ def plan_of(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def optimized_of(df) -> str:
-    return df._jdf.queryExecution().optimizedPlan().toString()
+def analyzed_of(df) -> str:
+    """The logical plan before cached data is substituted: every operator
+    the query runs, once per place it runs."""
+    return df._jdf.queryExecution().analyzed().toString()
+
+
+def children_of(plan: str, node: str) -> tuple[str, str]:
+    """(first, last) child subtrees of the first tree-string line that
+    contains ``node``, for a binary node such as a join."""
+    lines = plan.splitlines()
+    at = next(i for i, line in enumerate(lines) if node in line)
+    depth = lambda line: len(line) - len(line.lstrip(" :+-"))
+    col = depth(lines[at])
+    sub = []
+    for line in lines[at + 1:]:
+        if depth(line) <= col:
+            break
+        sub.append(line)
+    last = next(i for i, line in enumerate(sub) if line[col:col + 3] == "+- ")
+    return "\n".join(sub[:last]), "\n".join(sub[last:])
 
 
 class TestPlanShapes:
@@ -138,12 +156,14 @@ class TestPlanShapes:
         assert "BroadcastHashJoin" not in plan and "SortMergeJoin" not in plan
 
     def test_exact_anti_join_input_is_bloom_survivors(self, spark):
-        """filter_unseen's EXACT anti join must consume only the bloom's
-        maybe-member survivors — never the full candidate set (the known/
-        seen tables are ~80 GB of hashes at 10^10 URLs; the prune is what
-        keeps the per-round shuffle ∝ |survivors|). Asserted two ways:
-        plan shape (the LeftAnti's probe side filters on maybe_seen) and
-        measured IO (survivor count ≈ known ∩ candidates + FPR·rest)."""
+        """filter_unseen's exact step must consume only the bloom's
+        maybe-member survivors — never the full candidate set — and must
+        scan the seen table without shuffling it (the known/seen tables are
+        ~80 GB of hashes at 10^10 URLs). Asserted three ways: plan shape
+        (the membership semi join's survivor side filters on maybe_seen, the
+        bloom UDF appears once, no hash exchange over the seen input),
+        measured IO (survivor count ≈ known ∩ candidates + FPR·rest), and
+        exactness against the unpruned anti join."""
         from frontier_engine import urlseen
 
         cand = (
@@ -155,10 +175,13 @@ class TestPlanShapes:
         shards = urlseen.build_shards(known, 8, 1 << 14)
         out = urlseen.filter_unseen(cand, shards, known.select("url_hash"), 8)
 
-        plan = optimized_of(out)
-        join_at = plan.index("Join LeftAnti")
-        probe = "\n".join(plan[join_at:].splitlines()[1:4])
-        assert "maybe_seen" in probe, plan
+        plan = analyzed_of(out)
+        assert plan.count("FlatMapCoGroupsInPandas") == 1, plan
+        _, survivor_side = children_of(plan, "Join LeftSemi")
+        assert "Filter maybe_seen" in survivor_side, plan
+        physical = plan_of(out)
+        seen_side, _ = children_of(physical, "LeftSemi, BuildRight")
+        assert "Exchange hashpartitioning" not in seen_side, physical
         # measured prune: exact-join input ≪ candidates (10 known + FP)
         survivors = urlseen.mark_maybe_seen(cand, shards, 8).where("maybe_seen")
         assert survivors.count() < 50
